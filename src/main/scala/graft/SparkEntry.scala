@@ -55,9 +55,9 @@ object SparkEntry {
     * SHAPE, measured both ways this round (r18): an Association-style
     * basket rewrite (groupBy orderkey + collect_list + in-row pair
     * expansion, one exchange) was A/B'd against this self-join at
-    * sf0.1 AND at the 10× twin (graft.EdgeAB, interleaved arms, clean
-    * window). The basket arm won mildly at sf0.1 (0.75-0.83× on the
-    * pairs consumers) but lost 2.3-2.6× at 10×
+    * sf0.1 AND at the 10× twin (interleaved arms, clean window;
+    * OPTIMIZATION_r18.md §1). The basket arm won mildly at sf0.1
+    * (0.75-0.83× on the pairs consumers) but lost 2.3-2.6× at 10×
     * (join 2.7-3.9 s vs basket 7.0-7.6 s): collect_list is an
     * ObjectHashAggregate (object buffers, no whole-stage codegen) and
     * the struct explode re-materializes every pair, while the

@@ -12,46 +12,32 @@ import org.apache.spark.storage.StorageLevel
   * iterative-graph family. The reference has no graph analog — this is
   * training-pipeline surface, like NearDup/Similarity.
   *
-  * The iterative protocol mirrors `Components.scala`: eager
-  * `localCheckpoint` per round keeps the plan O(1) instead of a
-  * k-rounds-deep lineage (the reference's analog is its
-  * materialize-between-parts protocol, runAll.py:37-44).
+  * ROUND PROTOCOL of the fixed-iteration recurrences (pageRank /
+  * weighted / personalized, HITS, label propagation): each round's
+  * table is referenced ONCE (or twice, behind a shared exchange) by the
+  * next round, and the iteration count is a small API constant — so
+  * the rounds compose into ONE lazy plan whose single action executes
+  * the whole recurrence: no per-round checkpoint write, no per-round
+  * job submission, no per-round AQE session. Lineage stays
+  * O(iterations) by the fixed-count contract, and recovery rides
+  * Spark's shuffle files (stage retry recomputes only the lost stage).
+  * What pins ([[Components.pin]]) are the multiply-scanned BASE tables
+  * (edge set / node universe / restart vector) — pinned ONCE, so the
+  * returned plan references LogicalRDDs whose blocks the ContextCleaner
+  * releases when the result frame dies (a bare persist would leak a
+  * CacheManager entry for the session lifetime — the r14 class).
+  * `reliable = true` pins those bases to the checkpoint dir instead.
+  *
+  * Measured (r19, sf0.1 local[32]): an eager checkpoint per round paid
+  * ~0.5-0.9 s of pure job/checkpoint machinery per round, and lost to
+  * (or tied with) the lazy plan on every graph query at sf0.1 and the
+  * 10× twin
+  * (OPTIMIZATION_r19.md §1, plans/r19/GRAPHPIN_AB_*.txt). Loops whose
+  * rounds are re-read many times (Components' convergence-probed
+  * closure, kCorePeel's inner rounds, bfsDistances' inner frontier
+  * levels) KEEP per-round pins: that re-reading is what a pin is for.
   */
 object Graph {
-
-  /** Round protocol selector (r19). The fixed-iteration recurrences
-    * (pageRank / weighted / personalized, HITS, label propagation)
-    * reference each round's table ONCE (or twice, behind a shared
-    * exchange) in the next round, and the iteration count is a small
-    * API constant — so the rounds compose into ONE lazy plan whose
-    * single action executes the whole recurrence: no per-round eager
-    * checkpoint write, no per-round job submission, no per-round AQE
-    * session. Lineage stays O(iterations) by the fixed-count contract,
-    * and recovery rides Spark's shuffle files (stage retry recomputes
-    * only the lost stage) instead of NON-reliable localCheckpoint
-    * blocks, which an executor loss destroys unrecoverably. What still
-    * pins: the multiply-scanned BASE tables (edge set / node universe /
-    * restart vector) — pinned ONCE, so the returned plan references
-    * LogicalRDDs whose blocks the ContextCleaner releases when the
-    * result frame dies (a bare persist would leak a CacheManager entry
-    * for the session lifetime — the r14 class).
-    *
-    * Measured (r19, sf0.1 local[32]): the per-round pin protocol paid
-    * ~0.5-0.9 s of pure job/checkpoint machinery per round; the r18
-    * driver leg ran the pinned-round family ~2x FASTER on 8 cores than
-    * 32 — scheduling overhead, not compute. Convergence-probed loops
-    * (Components, kCorePeel's per-round reuse, bfsDistances' multi-
-    * referenced frontier levels) KEEP per-round pins: their rounds are
-    * re-read many times, which is what the eager checkpoint is for.
-    *
-    * `spark.graft.graph.pinRounds=true` restores the r18 per-round
-    * eager-localCheckpoint protocol (A/B diagnostic; also the knob for
-    * a cluster that wants per-round durable checkpoints with
-    * `reliable = true` instead of bounded shuffle-replay recovery).
-    */
-  private def lazyRounds(df: DataFrame): Boolean =
-    df.sparkSession.conf.get("spark.graft.graph.pinRounds",
-      "false") != "true"
 
   /** Simplified PageRank with a FIXED iteration count:
     *
@@ -79,13 +65,12 @@ object Graph {
     *    over O(|E|) rows, map-side-combined; no collect of anything
     *    graph-sized. The one driver-side scalar is N (a count — same
     *    contract as Similarity's centroid collect).
-    *  - Rounds compose into ONE lazy plan (see [[lazyRounds]]): the
-    *    fixed iteration count bounds lineage, the single action runs
-    *    the whole recurrence with no per-round checkpoint write or job,
-    *    and recovery rides the shuffle files. Base tables (nodes,
-    *    linked, sinks) are pinned once. `spark.graft.graph.pinRounds=
-    *    true` restores the r18 eager-checkpoint-per-round protocol
-    *    (with `reliable = true` for durable per-round checkpoints).
+    *  - Rounds compose into ONE lazy plan (the round protocol in the
+    *    object doc): the fixed iteration count bounds lineage, the
+    *    single action runs the whole recurrence with no per-round
+    *    checkpoint write or job, and recovery rides the shuffle files.
+    *    Base tables (nodes, linked, sinks) are pinned once
+    *    (`reliable = true` pins them to the checkpoint dir).
     *
     * Returns (id, pr) with Σ pr ≤ 1 (equality iff no sinks or
     * `redistributeSinks`).
@@ -95,11 +80,10 @@ object Graph {
                reliable: Boolean = false,
                redistributeSinks: Boolean = false): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val lzy = lazyRounds(edges)
     // persisted: nodes, outdeg and linked all derive from the distinct
     // — uncached, each would re-pay the dedup shuffle. e itself is only
     // scanned at CONSTRUCTION (building nodes/linked/sinks), so a
-    // construction-scoped persist is the right lifetime in both modes.
+    // construction-scoped persist is the right lifetime.
     val e = edges
       .select(col(srcCol).cast("long").as("src"),
               col(dstCol).cast("long").as("dst"))
@@ -109,12 +93,11 @@ object Graph {
     // node universe in ONE scan of the pinned edge set via explode
     // (q222's fusion, r18) — the two-scan union read the cached edges
     // twice per materialization; same distinct id set either way.
-    // Lazy mode pins it ONCE (every round's base join + the init rank
-    // table read it from the returned plan, after e is unpersisted)
-    val nodes0 = e.select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct()
-    val nodes = if (lzy) Components.pin(nodes0, reliable)
-                else nodes0.persist(StorageLevel.MEMORY_AND_DISK)
+    // Pinned ONCE: every round's base join + the init rank table read
+    // it from the returned plan, after e is unpersisted
+    val nodes = Components.pin(
+      e.select(explode(array(col("src"), col("dst"))).as("id")).distinct(),
+      reliable)
     val n = nodes.count().toDouble // driver scalar, O(1) bytes
     // outdeg attached by a count-over-window on the SAME src exchange
     // that the persisted frame needs anyway (r18): the groupBy+join
@@ -123,41 +106,40 @@ object Graph {
     // exchanges it ONCE and counts within the partition — identical
     // rows, and the persisted partitioning (hash(src)) is unchanged,
     // so every round's contribution join still moves only the ranks
-    val linked0 = e.repartition(col("src"))
-      .withColumn("outdeg", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-    val linked = if (lzy) Components.pin(linked0, reliable)
-                 else linked0.persist(StorageLevel.MEMORY_AND_DISK)
+    val linked = Components.pin(
+      e.repartition(col("src"))
+        .withColumn("outdeg", count(lit(1)).over(
+          org.apache.spark.sql.expressions.Window.partitionBy(col("src")))),
+      reliable)
     // sink ids (no out-edges) — only materialized when their mass is
     // redistributed; node-sized, one anti-join, reused every round
     val sinks =
-      if (redistributeSinks) {
-        val s0 = nodes.join(e.select(col("src").as("id")).distinct(),
-          Seq("id"), "left_anti")
-        Some(if (lzy) Components.pin(s0, reliable)
-             else s0.persist(StorageLevel.MEMORY_AND_DISK))
-      } else None
+      if (redistributeSinks)
+        Some(Components.pin(
+          nodes.join(e.select(col("src").as("id")).distinct(),
+            Seq("id"), "left_anti"),
+          reliable))
+      else None
 
-    val init = nodes.select(col("id"), lit(1.0 / n).as("pr"))
-    var ranks = if (lzy) init else Components.pin(init, reliable)
+    var ranks = nodes.select(col("id"), lit(1.0 / n).as("pr"))
     for (_ <- 1 to iterations) {
       val contrib = linked
         .join(ranks.select(col("id").as("src"), col("pr")), "src")
         .select(col("dst").as("id"), (col("pr") / col("outdeg")).as("c"))
         .groupBy(col("id")).agg(sum(col("c")).as("inmass"))
       val base = nodes.join(contrib, Seq("id"), "left")
-      val stepped = sinks match {
+      ranks = sinks match {
         case None =>
           base.select(col("id"),
             (lit((1 - damping) / n) +
              lit(damping) * coalesce(col("inmass"), lit(0.0))).as("pr"))
         case Some(sk) =>
           // dangling mass this round: one-row aggregate over the rank
-          // table, broadcast into every task. In lazy mode this is the
-          // recurrence's one DOUBLE reference to the previous round —
-          // both branches contain the identical subtree, so its
-          // exchanges collapse via ReuseExchange/AQE stage reuse and
-          // only the node-sized post-shuffle tail evaluates twice
+          // table, broadcast into every task. This is the recurrence's
+          // one DOUBLE reference to the previous round — both branches
+          // contain the identical subtree, so its exchanges collapse via
+          // ReuseExchange/AQE stage reuse and only the node-sized
+          // post-shuffle tail evaluates twice
           val dm = ranks.join(sk, "id")
             .agg(coalesce(sum(col("pr")), lit(0.0)).as("_dm"))
           base.crossJoin(broadcast(dm))
@@ -166,20 +148,8 @@ object Graph {
                (coalesce(col("inmass"), lit(0.0)) +
                 col("_dm") / lit(n))).as("pr"))
       }
-      if (lzy) ranks = stepped
-      else {
-        val next = Components.pin(stepped, reliable)
-        // release the superseded round's blocks NOW (Components rule)
-        Components.releasePin(ranks, reliable)
-        ranks = next
-      }
     }
     e.unpersist(false)
-    if (!lzy) {
-      nodes.unpersist(false)
-      linked.unpersist(false)
-      sinks.foreach(_.unpersist(false))
-    }
     ranks
   }
 
@@ -192,8 +162,8 @@ object Graph {
     *
     * Same scale shape and lifecycle as [[pageRank]]: fixed rounds
     * (oracle-unrollable), two O(|E|) shuffles per round, rounds
-    * pinned via [[Components.pin]] with eager release, nothing
-    * collected but the node count. Weights must be positive integers
+    * composed into one lazy plan over the once-pinned nodes and
+    * linked tables, nothing collected but the node count. Weights must be positive integers
     * (support counts); wout sums exactly, the ratio casts to double
     * once per edge.
     */
@@ -202,7 +172,6 @@ object Graph {
                        damping: Double = 0.85,
                        reliable: Boolean = false): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val lzy = lazyRounds(edges)
     val e = edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"),
@@ -214,45 +183,33 @@ object Graph {
     // node universe in ONE scan of the pinned edge set via explode
     // (q222's fusion, r18) — the two-scan union read the cached edges
     // twice per materialization; same distinct id set either way
-    val nodes0 = e.select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct()
-    val nodes = if (lzy) Components.pin(nodes0, reliable)
-                else nodes0.persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes = Components.pin(
+      e.select(explode(array(col("src"), col("dst"))).as("id")).distinct(),
+      reliable)
     val n = nodes.count().toDouble // driver scalar, O(1) bytes
     // wout via count-over-window on the one src exchange the persisted
     // frame needs anyway — see [[pageRank]]'s linked build (r18)
-    val linked0 = e.repartition(col("src"))
-      .withColumn("wout", sum(col("w")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-      .select(col("src"), col("dst"),
-        (col("w").cast("double") / col("wout").cast("double"))
-          .as("share"))
-    val linked = if (lzy) Components.pin(linked0, reliable)
-                 else linked0.persist(StorageLevel.MEMORY_AND_DISK)
+    val linked = Components.pin(
+      e.repartition(col("src"))
+        .withColumn("wout", sum(col("w")).over(
+          org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
+        .select(col("src"), col("dst"),
+          (col("w").cast("double") / col("wout").cast("double"))
+            .as("share")),
+      reliable)
 
-    val init = nodes.select(col("id"), lit(1.0 / n).as("pr"))
-    var ranks = if (lzy) init else Components.pin(init, reliable)
+    var ranks = nodes.select(col("id"), lit(1.0 / n).as("pr"))
     for (_ <- 1 to iterations) {
       val contrib = linked
         .join(ranks.select(col("id").as("src"), col("pr")), "src")
         .select(col("dst").as("id"), (col("pr") * col("share")).as("c"))
         .groupBy(col("id")).agg(sum(col("c")).as("inmass"))
-      val stepped = nodes.join(contrib, Seq("id"), "left")
+      ranks = nodes.join(contrib, Seq("id"), "left")
         .select(col("id"),
           (lit((1 - damping) / n) +
             lit(damping) * coalesce(col("inmass"), lit(0.0))).as("pr"))
-      if (lzy) ranks = stepped
-      else {
-        val next = Components.pin(stepped, reliable)
-        Components.releasePin(ranks, reliable)
-        ranks = next
-      }
     }
     e.unpersist(false)
-    if (!lzy) {
-      nodes.unpersist(false)
-      linked.unpersist(false)
-    }
     ranks
   }
 
@@ -268,9 +225,10 @@ object Graph {
     *
     * SCALE SHAPE: a round is one degree aggregation (map-side combined)
     * plus two semi-joins of the edge table against the surviving-node
-    * table — all hash-distributed, nothing collected; eager checkpoint
-    * per round via Components' pin/releasePin keeps the plan O(1)
-    * (`reliable = true` for executor-loss recovery).
+    * table — all hash-distributed, nothing collected. Each inner
+    * round is re-scanned three times by the next, so it is pinned
+    * with eager release (Components' pin/releasePin; `reliable =
+    * true` for executor-loss recovery); the final round stays lazy.
     *
     * Returns (id, deg): survivors after `rounds` peels with their
     * degree in the REMAINING graph.
@@ -297,7 +255,7 @@ object Graph {
         .join(keep.select(col("id").as("u")), Seq("u"), "left_semi")
         .join(keep.select(col("id").as("v")), Seq("v"), "left_semi")
         .select(col("u"), col("v"))
-      if (r == rounds && lazyRounds(edges)) {
+      if (r == rounds) {
         // FINAL round (r19): consumed exactly once, by the closing
         // degrees scan — its eager pin bought no reuse, only a
         // checkpoint write + job. The two keep copies in the semi-joins
@@ -314,31 +272,6 @@ object Graph {
     degrees(cur)
   }
 
-  /** Synchronous label propagation (community detection) with a FIXED
-    * iteration count — the deterministic LPA variant: every node starts
-    * labeled with its own id; each round every node simultaneously
-    * adopts the most frequent label among its neighbors (the graph is
-    * treated as undirected), ties broken by SMALLEST label. Synchronous
-    * update + deterministic tie-break make the result engine-exact, so
-    * the oracle can unroll the same rounds in SQL (the async
-    * "random order" folklore variant is not reproducible across
-    * engines and is deliberately not implemented).
-    *
-    * Scale design (the [[pageRank]] protocol):
-    *  - the undirected simple edge list is materialized once
-    *    (union + distinct) and persisted; every node in the universe
-    *    has ≥ 1 neighbor by construction, so no isolated-node branch.
-    *  - each round = one rank-table join + one (node, label) count agg
-    *    + one per-node argmax agg — all map-side combined, O(|E|) rows
-    *    shuffled, nothing collected. The argmax is
-    *    `max(struct(cnt, -label))` — an AGGREGATE, not a window, so
-    *    the per-node reduction happens map-side too.
-    *  - eager checkpoint per round via Components' `pin`/`releasePin`
-    *    (O(1) plan; `reliable = true` for executor-loss recovery).
-    *
-    * Returns (id, label); nodes sharing a label after k rounds are one
-    * community. Labels are a subset of node ids.
-    */
   /** Per-node triangle counts (undirected, simple graph) — the local
     * clustering signal link-spam / bot-farm detection reads off a
     * crawl graph. Edges are canonicalized to unordered pairs; each
@@ -402,8 +335,9 @@ object Graph {
     // all three corners in ONE scan of the close join's output (r19):
     // the union-of-three-projections form re-EXECUTED the wedge-close
     // join per branch — only its input exchanges were shared, so the
-    // probe/merge ran 3x (TriDecomp at the 100x twin: one close pass
-    // 23 s, the union tail 76 s). explode emits the same corner
+    // probe/merge ran 3x (at the 100x twin one close pass took 23 s,
+    // the union tail 76 s — OPTIMIZATION_r19.md §4,
+    // plans/r19/TRIDECOMP_sf10.txt). explode emits the same corner
     // multiset from a single pass, and the join runs once.
     val perNode = tri
       .select(explode(array(col("a"), col("b"), col("c"))).as("id"))
@@ -426,11 +360,12 @@ object Graph {
     * round joins the EDGE table against only the nodes first reached
     * last round (`dist = h−1`), dedups the neighbor set, and anti-joins
     * out everything already labeled — O(|frontier edges|) shuffled per
-    * round, not O(|V|)·rounds. Only each round's FRESH level is
+    * round, not O(|V|)·rounds. Only each inner round's FRESH level is
     * checkpointed (Components' pin; `reliable = true` for
-    * executor-loss recovery): the settled set is the lazy union of the
-    * ≤maxHops pinned levels, so no round re-materializes what earlier
-    * rounds already wrote. Nothing is ever collected.
+    * executor-loss recovery; the final level is read once and stays
+    * lazy): the settled set is the lazy union of the ≤maxHops levels,
+    * so no round re-materializes what earlier rounds already wrote.
+    * Nothing is ever collected.
     *
     * Returns (id, dist: int) for every node within `maxHops` of a seed;
     * seeds themselves are dist 0 (even if isolated). Unreached nodes
@@ -451,7 +386,6 @@ object Graph {
     // build — the union form EXECUTED the whole upstream subtree twice
     // before the distinct (r18); explode emits the two orientations
     // from one scan, same distinct set
-    val lzy = lazyRounds(edges)
     val e1 = (if (undirected)
                 e0.select(explode(array(
                     struct(col("s"), col("d")),
@@ -459,15 +393,14 @@ object Graph {
                   .select(col("_b.s").as("s"), col("_b.d").as("d"))
               else e0)
       .distinct()
-    // lazy mode pins the edge set ONCE (same single materialization a
+    // the edge set is pinned ONCE (same single materialization a
     // persist pays, minus the CacheManager entry) so the FINAL level
     // can stay lazy — it is consumed exactly once, by the output
     // union, and its eager pin bought only a checkpoint write + job.
     // Inner levels keep their pins: level h is re-read as the next
     // frontier AND by every later round's settled anti-join (the
     // delta-frontier design depends on those reads being cheap).
-    val e = if (lzy) Components.pin(e1, reliable)
-            else e1.persist(StorageLevel.MEMORY_AND_DISK)
+    val e = Components.pin(e1, reliable)
     // one pinned table PER LEVEL, never a re-materialized union: round
     // h checkpoints only the fresh frontier (which SHRINKS as the
     // search saturates), and the settled set is the lazy union of the
@@ -484,14 +417,39 @@ object Graph {
         .join(settled, Seq("id"), "left_anti")
         .select(col("id"), lit(h).as("dist"))
       val fresh =
-        if (h == maxHops && lzy) freshPlan // consumed once, by the union
+        if (h == maxHops) freshPlan // consumed once, by the union
         else Components.pin(freshPlan, reliable)
       levels = fresh :: levels
     }
-    if (!lzy) e.unpersist(false)
     levels.reduce(_.union(_))
   }
 
+  /** Synchronous label propagation (community detection) with a FIXED
+    * iteration count — the deterministic LPA variant: every node starts
+    * labeled with its own id; each round every node simultaneously
+    * adopts the most frequent label among its neighbors (the graph is
+    * treated as undirected), ties broken by SMALLEST label. Synchronous
+    * update + deterministic tie-break make the result engine-exact, so
+    * the oracle can unroll the same rounds in SQL (the async
+    * "random order" folklore variant is not reproducible across
+    * engines and is deliberately not implemented).
+    *
+    * Scale design (the [[pageRank]] protocol):
+    *  - the undirected simple edge list is materialized once
+    *    (explode + distinct) and pinned; every node in the universe
+    *    has ≥ 1 neighbor by construction, so no isolated-node branch.
+    *  - each round = one rank-table join + one (node, label) count agg
+    *    + one per-node argmax agg — all map-side combined, O(|E|) rows
+    *    shuffled, nothing collected. The argmax is
+    *    `max(struct(cnt, -label))` — an AGGREGATE, not a window, so
+    *    the per-node reduction happens map-side too.
+    *  - the rounds compose into one lazy plan over the pinned edge
+    *    list (O(iterations) lineage; `reliable = true` pins it to the
+    *    checkpoint dir).
+    *
+    * Returns (id, label); nodes sharing a label after k rounds are one
+    * community. Labels are a subset of node ids.
+    */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iterations: Int,
                        reliable: Boolean = false): DataFrame = {
@@ -501,39 +459,30 @@ object Graph {
               col(dstCol).cast("long").as("v"))
       .where(col("u").isNotNull && col("v").isNotNull &&
              col("u") =!= col("v"))
-    val lzy = lazyRounds(edges)
     // one pass over the upstream edge build (was a two-scan union that
     // executed the unpersisted subtree twice — r18, see bfsDistances).
-    // und is scanned EVERY round — lazy mode pins it once (the rounds
-    // read it from the returned plan, long after construction)
-    val und0 = e.select(explode(array(
-        struct(col("u"), col("v")),
-        struct(col("v").as("u"), col("u").as("v")))).as("_b"))
-      .select(col("_b.u").as("u"), col("_b.v").as("v"))
-      .distinct()
-    val und = if (lzy) Components.pin(und0, reliable)
-              else und0.persist(StorageLevel.MEMORY_AND_DISK)
+    // und is scanned EVERY round — pinned once (the rounds read it
+    // from the returned plan, long after construction)
+    val und = Components.pin(
+      e.select(explode(array(
+          struct(col("u"), col("v")),
+          struct(col("v").as("u"), col("u").as("v")))).as("_b"))
+        .select(col("_b.u").as("u"), col("_b.v").as("v"))
+        .distinct(),
+      reliable)
 
-    val init = und.select(col("u").as("id")).distinct()
+    var labels = und.select(col("u").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
-    var labels = if (lzy) init else Components.pin(init, reliable)
     for (_ <- 1 to iterations) {
       val counts = und
         .join(labels.select(col("id").as("v"), col("label")), "v")
         .groupBy(col("u"), col("label"))
         .agg(count(lit(1)).as("cnt"))
-      val stepped = counts
+      labels = counts
         .groupBy(col("u"))
         .agg(max(struct(col("cnt"), (-col("label")).as("neg"))).as("m"))
         .select(col("u").as("id"), (-col("m.neg")).as("label"))
-      if (lzy) labels = stepped
-      else {
-        val next = Components.pin(stepped, reliable)
-        Components.releasePin(labels, reliable)
-        labels = next
-      }
     }
-    if (!lzy) und.unpersist(false)
     labels
   }
 
@@ -557,69 +506,48 @@ object Graph {
     * identical. The final normalizer is a ONE-ROW aggregate broadcast
     * — never a graph-sized collect.
     *
-    * SCALE SHAPE (the [[pageRank]] protocol): the distinct edge list is
-    * persisted once; each half-step is ONE score-table join + ONE
-    * map-side-combined aggregation over O(|E|) rows (zero-score nodes
-    * are simply absent from intermediates — they contribute nothing —
-    * and are 0-filled once at the end). Checkpointing is per ROUND,
-    * not per half-step (r18): the auth half-step feeds only the same
-    * round's hub pin, so it rides unpinned inside that pin's job —
-    * lineage stays O(1) at two joins deep, and every round saves one
-    * full checkpoint write + job of the node-sized auth table (the
-    * final round's auth table IS output, so that one is pinned).
-    * `reliable = true` for executor-loss recovery. Returns
+    * SCALE SHAPE (the [[pageRank]] protocol): the distinct edge list
+    * and the node universe are pinned once; each half-step is ONE
+    * score-table join + ONE map-side-combined aggregation over O(|E|)
+    * rows (zero-score nodes are simply absent from intermediates —
+    * they contribute nothing — and are 0-filled once at the end). The
+    * rounds compose into one lazy plan; the final auth table rides the
+    * output plan, its exchanges shared with the final hub half-step
+    * via ReuseExchange (identical subtrees). `reliable = true` pins the
+    * bases to the checkpoint dir. Returns
     * (id, hub, auth) over the full node universe — nodes with no
     * in-edges have auth 0, no out-edges hub 0.
     */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iterations: Int, reliable: Boolean = false): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val lzy = lazyRounds(edges)
-    // e is scanned TWICE PER ROUND (both half-steps) — lazy mode pins
-    // it once so the returned plan's rounds read checkpoint blocks,
-    // not a recomputed dedup per scan
-    val e0 = edges
-      .select(col(srcCol).cast("long").as("src"),
-              col(dstCol).cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-    val e = if (lzy) Components.pin(e0, reliable)
-            else e0.persist(StorageLevel.MEMORY_AND_DISK)
+    // e is scanned TWICE PER ROUND (both half-steps) — pinned once so
+    // the returned plan's rounds read checkpoint blocks, not a
+    // recomputed dedup per scan
+    val e = Components.pin(
+      edges
+        .select(col(srcCol).cast("long").as("src"),
+                col(dstCol).cast("long").as("dst"))
+        .where(col("src").isNotNull && col("dst").isNotNull)
+        .distinct(),
+      reliable)
     // node universe in ONE scan of the pinned edge set via explode
     // (q222's fusion, r18) — the two-scan union read the cached edges
     // twice per materialization; same distinct id set either way
-    val nodes0 = e.select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct()
-    val nodes = if (lzy) Components.pin(nodes0, reliable)
-                else nodes0.persist(StorageLevel.MEMORY_AND_DISK)
-    val init = nodes.select(col("id"), lit(1.0).as("hub"))
-    var hubs = if (lzy) init else Components.pin(init, reliable)
+    val nodes = Components.pin(
+      e.select(explode(array(col("src"), col("dst"))).as("id")).distinct(),
+      reliable)
+    var hubs = nodes.select(col("id"), lit(1.0).as("hub"))
     var auths: DataFrame = null
-    for (i <- 1 to iterations) {
-      val a = e
+    for (_ <- 1 to iterations) {
+      auths = e
         .join(hubs.select(col("id").as("src"), col("hub")), "src")
         .groupBy(col("dst")).agg(sum(col("hub")).as("auth"))
         .select(col("dst").as("id"), col("auth"))
-      // old protocol: the last round's auth table is part of the
-      // output — pin it; earlier rounds' auth tables feed only hNext's
-      // pin job and are never re-read. Lazy protocol: the final auth
-      // rides the output plan (its exchanges are shared with the final
-      // hub half-step via ReuseExchange — identical subtrees)
-      val aUse =
-        if (!lzy && i == iterations) Components.pin(a, reliable) else a
-      val hStep = e
-        .join(aUse.select(col("id").as("dst"), col("auth")), "dst")
+      hubs = e
+        .join(auths.select(col("id").as("dst"), col("auth")), "dst")
         .groupBy(col("src")).agg(sum(col("auth")).as("hub"))
         .select(col("src").as("id"), col("hub"))
-      if (lzy) hubs = hStep
-      else {
-        val hNext = Components.pin(hStep, reliable)
-        // safe to release only AFTER hNext (and aUse, last round) are
-        // materialized — both pins are eager
-        Components.releasePin(hubs, reliable)
-        hubs = hNext
-      }
-      if (i == iterations) auths = aUse
     }
     val joined = nodes
       .join(hubs, Seq("id"), "left")
@@ -628,14 +556,9 @@ object Graph {
         coalesce(col("auth"), lit(0.0)).as("auth"))
     val tots = joined.agg(sum(col("hub")).as("_th"),
       sum(col("auth")).as("_ta"))
-    val out = joined.crossJoin(broadcast(tots))
+    joined.crossJoin(broadcast(tots))
       .select(col("id"), (col("hub") / col("_th")).as("hub"),
         (col("auth") / col("_ta")).as("auth"))
-    if (!lzy) {
-      e.unpersist(false)
-      nodes.unpersist(false)
-    }
-    out
   }
 
   /** PERSONALIZED PageRank: random walk with restart to a SEED SET —
@@ -649,10 +572,11 @@ object Graph {
     * seeds). Sink mass leaves the system (pseudo-PPR), keeping the
     * recurrence oracle-unrollable.
     *
-    * SCALE SHAPE: identical to [[pageRank]] — pre-joined persisted
-    * edge+outdeg table, two shuffles per round, pinned rounds with
-    * eager release; the seed indicator is a broadcast semi/left join,
-    * never a collect. Returns (id, ppr) over the node universe.
+    * SCALE SHAPE: identical to [[pageRank]] — pre-joined pinned
+    * edge+outdeg table and restart vector, two shuffles per round, the
+    * rounds composed into one lazy plan; the seed indicator is a
+    * broadcast semi/left join, never a collect. Returns (id, ppr) over
+    * the node universe.
     */
   def personalizedPageRank(edges: DataFrame, srcCol: String,
                            dstCol: String, seeds: DataFrame,
@@ -660,7 +584,6 @@ object Graph {
                            damping: Double = 0.85,
                            reliable: Boolean = false): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val lzy = lazyRounds(edges)
     val e = edges
       .select(col(srcCol).cast("long").as("src"),
               col(dstCol).cast("long").as("dst"))
@@ -671,7 +594,7 @@ object Graph {
     // (q222's fusion, r18) — the two-scan union read the cached edges
     // twice per materialization; same distinct id set either way.
     // nodes feeds only the restart build, so a construction-scoped
-    // persist suffices in both modes (the rounds reference restart)
+    // persist suffices (the rounds reference restart)
     val nodes = e.select(explode(array(col("src"), col("dst"))).as("id"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -682,46 +605,35 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nSeeds = s.count().toDouble // driver scalar, O(1) bytes
     require(nSeeds > 0, "no seed is a graph node")
-    val restart0 = nodes
-      .join(s.select(col("id"), lit(1.0 / nSeeds).as("_s")),
-        Seq("id"), "left")
-      .select(col("id"), coalesce(col("_s"), lit(0.0)).as("s"))
     // restart is read EVERY round (the base left-join) + as the init
-    // rank vector — lazy mode pins it once
-    val restart = if (lzy) Components.pin(restart0, reliable)
-                  else restart0.persist(StorageLevel.MEMORY_AND_DISK)
+    // rank vector — pinned once
+    val restart = Components.pin(
+      nodes
+        .join(s.select(col("id"), lit(1.0 / nSeeds).as("_s")),
+          Seq("id"), "left")
+        .select(col("id"), coalesce(col("_s"), lit(0.0)).as("s")),
+      reliable)
     // outdeg via count-over-window on the one src exchange the
-    // persisted frame needs anyway — see [[pageRank]]'s linked build
-    val linked0 = e.repartition(col("src"))
-      .withColumn("outdeg", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-    val linked = if (lzy) Components.pin(linked0, reliable)
-                 else linked0.persist(StorageLevel.MEMORY_AND_DISK)
-    val init = restart.select(col("id"), col("s").as("ppr"))
-    var ranks = if (lzy) init else Components.pin(init, reliable)
+    // pinned frame needs anyway — see [[pageRank]]'s linked build
+    val linked = Components.pin(
+      e.repartition(col("src"))
+        .withColumn("outdeg", count(lit(1)).over(
+          org.apache.spark.sql.expressions.Window.partitionBy(col("src")))),
+      reliable)
+    var ranks = restart.select(col("id"), col("s").as("ppr"))
     for (_ <- 1 to iterations) {
       val contrib = linked
         .join(ranks.select(col("id").as("src"), col("ppr")), "src")
         .select(col("dst").as("id"), (col("ppr") / col("outdeg")).as("c"))
         .groupBy(col("id")).agg(sum(col("c")).as("inmass"))
-      val stepped = restart.join(contrib, Seq("id"), "left")
+      ranks = restart.join(contrib, Seq("id"), "left")
         .select(col("id"),
           (lit(1 - damping) * col("s") + lit(damping) *
            coalesce(col("inmass"), lit(0.0))).as("ppr"))
-      if (lzy) ranks = stepped
-      else {
-        val next = Components.pin(stepped, reliable)
-        Components.releasePin(ranks, reliable)
-        ranks = next
-      }
     }
     e.unpersist(false)
     nodes.unpersist(false)
     s.unpersist(false)
-    if (!lzy) {
-      linked.unpersist(false)
-      restart.unpersist(false)
-    }
     ranks
   }
 

@@ -189,14 +189,13 @@ class GraphSpec extends SparkTestBase {
     assert(d == Map(1L -> 0, 2L -> 1)) // 3 only reachable backwards
   }
 
-  test("pageRank round-protocol plan contract: lazy O(iterations) over " +
-       "pinned bases by default, O(1) with pinRounds=true") {
+  test("pageRank round-protocol plan contract: one lazy O(iterations) plan") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
-    // default (r19 lazy rounds): ONE lazy plan, depth LINEAR in the
-    // fixed iteration count — bounded by the API contract — whose only
-    // leaves are the pinned base LogicalRDDs (nodes/linked), so no
-    // unpinned upstream subtree is ever re-executed per round and no
-    // per-round checkpoint job runs
+    // ONE lazy plan, depth LINEAR in the fixed iteration count —
+    // bounded by the API contract — whose only leaves are the pinned
+    // base LogicalRDDs (nodes/linked), so no unpinned upstream
+    // subtree is ever re-executed per round and no per-round
+    // checkpoint job runs
     val pr10 = Graph.pageRank(edges, "src", "dst", 10)
     val plan = pr10.queryExecution.optimizedPlan
     val lines = plan.toString.linesIterator.size
@@ -209,16 +208,6 @@ class GraphSpec extends SparkTestBase {
     val pr = pr10.as[(Long, Double)].collect().toMap
     // symmetric cycle stays uniform at 1/3 forever
     pr.values.foreach(v => assert(math.abs(v - 1.0 / 3) < 1e-12))
-    // pinRounds=true restores the r18 O(1)-plan eager protocol, and
-    // both protocols compute the identical table
-    spark.conf.set("spark.graft.graph.pinRounds", "true")
-    try {
-      val prPinned = Graph.pageRank(edges, "src", "dst", 10)
-      val pinnedPlan = prPinned.queryExecution.optimizedPlan.toString
-      assert(pinnedPlan.linesIterator.size < 10,
-        s"pinned-mode plan too deep:\n$pinnedPlan")
-      assert(prPinned.as[(Long, Double)].collect().toMap == pr)
-    } finally spark.conf.unset("spark.graft.graph.pinRounds")
   }
 
   test("hits matches the hand-computed L1-normalized recurrence") {
