@@ -426,7 +426,10 @@ object Bench {
     val passCalJson = passCal
       .map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"plain":$plain,"spread":$spread,"reps_s":$repsRaw,"reps":$reps,"failed":$failed,"hostcal_ms":$hostcal,"hostcal_ms_start":$hostcalStart,"hostcal_ms_end":$hostcalEnd,"hostcal_par_ms":$hostcalPar,"hostcal_par_ms_start":$hostcalParStart,"hostcal_par_ms_end":$hostcalParEnd,"hostcal_par_ms_passes":$passCalJson,"preflight_par_ms":$preflightPar,"preflight_contended":$preflightContended,"git_sha":"$gitSha","git_dirty":$gitDirty,"n_registry":$nRegistry,"order":$orderDesc,"sf":"$sfDir"$rowsJson}"""
+    // one-time schema inference the session's table catalog paid (mostly
+    // in the warm-up pass): the timed passes no longer include it
+    val (tableResolves, tableResolveMs) = GraftSession.catalogStats(spark)
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"plain":$plain,"spread":$spread,"reps_s":$repsRaw,"reps":$reps,"failed":$failed,"hostcal_ms":$hostcal,"hostcal_ms_start":$hostcalStart,"hostcal_ms_end":$hostcalEnd,"hostcal_par_ms":$hostcalPar,"hostcal_par_ms_start":$hostcalParStart,"hostcal_par_ms_end":$hostcalParEnd,"hostcal_par_ms_passes":$passCalJson,"preflight_par_ms":$preflightPar,"preflight_contended":$preflightContended,"git_sha":"$gitSha","git_dirty":$gitDirty,"n_registry":$nRegistry,"order":$orderDesc,"table_resolves":$tableResolves,"table_resolve_ms":${math.round(tableResolveMs * 10) / 10.0},"sf":"$sfDir"$rowsJson}"""
     // DURABLE ARTIFACT: the harness records a bounded TAIL of stdout
     // (~2000 chars), and with 270+ queries the full one-line JSON
     // outgrows that window by >10x — rounds 3-9 recorded `parsed: null`

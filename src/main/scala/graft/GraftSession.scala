@@ -1,8 +1,13 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType,
+  TimestampType}
 
 /** Session factory + table access for the graft engine.
   *
@@ -110,13 +115,94 @@ object GraftSession {
     normalizeEventTime(rawTable(spark, sfDir, name))
 
   /** Read a table exactly as encoded on disk — no event-time
-    * normalization. Streaming sources need this schema (a stream must be
-    * given the FILE schema, then normalized post-load with
-    * [[normalizeEventTime]], which is a plain projection and so works on
-    * streaming frames too).
+    * normalization. The file schema comes from the session's catalog
+    * ([[tableSchema]]), so only the first open of a table pays Parquet
+    * schema inference (one Spark job); every call still builds a fresh
+    * relation with fresh attribute ids, which self-joins rely on.
     */
-  def rawTable(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def rawTable(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = tablePath(sfDir, name)
+    spark.read.schema(SchemaCatalog.schema(spark, path)).parquet(path)
+  }
+
+  /** A table's FILE schema, as `spark.read.parquet` infers it under this
+    * session's conf (Long for nanosAsLong files, TIMESTAMP_NTZ for
+    * timestamp[us]). Streaming sources need it: a stream is given the
+    * file schema, then normalized post-load with [[normalizeEventTime]],
+    * a plain projection that works on streaming frames too.
+    */
+  def tableSchema(spark: SparkSession, sfDir: String, name: String)
+      : StructType =
+    SchemaCatalog.schema(spark, tablePath(sfDir, name))
+
+  /** How many schemas this session's catalog has inferred, and the
+    * milliseconds they took — the one-time cost table opens no longer pay.
+    */
+  def catalogStats(spark: SparkSession): (Long, Double) = {
+    val c = SchemaCatalog.of(spark)
+    (c.resolves.get, c.resolveNanos.get / 1e6)
+  }
+
+  private def tablePath(sfDir: String, name: String): String =
+    s"$sfDir/$name.parquet"
+
+  /** Per-session schema catalog. Parquet schema inference launches a
+    * Spark job per read (footer scan); a library that reopens the same
+    * tables for every query pays it on every open. Only the StructType is
+    * cached — never a DataFrame — keyed per path by what the inference
+    * depends on: the file's modification time and length (a file
+    * rewritten at the same path is resolved again) and the session's
+    * explicitly set Parquet read confs. Sessions are weak keys, so a
+    * stopped session's catalog goes with it.
+    */
+  private object SchemaCatalog {
+    final case class Stamp(modified: Long, length: Long,
+                           readConf: Map[String, String])
+    final case class Entry(stamp: Stamp, schema: StructType)
+    final class Catalog {
+      val entries = new ConcurrentHashMap[String, Entry]()
+      val resolves = new AtomicLong
+      val resolveNanos = new AtomicLong
+    }
+
+    private val sessions = new java.util.WeakHashMap[SparkSession, Catalog]()
+
+    def of(spark: SparkSession): Catalog = sessions.synchronized {
+      sessions.computeIfAbsent(spark, _ => new Catalog)
+    }
+
+    def schema(spark: SparkSession, path: String): StructType = {
+      val c = of(spark)
+      val stamp = stampOf(spark, path)
+      val hit = c.entries.get(path)
+      if (hit != null && hit.stamp == stamp) hit.schema
+      else c.entries.compute(path, (_, old) =>
+        if (old != null && old.stamp == stamp) old
+        else {
+          val t0 = System.nanoTime()
+          val inferred = spark.read.parquet(path).schema
+          c.resolveNanos.addAndGet(System.nanoTime() - t0)
+          c.resolves.incrementAndGet()
+          Entry(stamp, inferred)
+        }).schema
+    }
+
+    // a missing path gets a stamp too; inference then fails exactly as an
+    // uncached read would, and nothing is cached
+    private def stampOf(spark: SparkSession, path: String): Stamp = {
+      val p = new Path(path)
+      val (modified, length) =
+        try {
+          val st = p.getFileSystem(spark.sessionState.newHadoopConf())
+            .getFileStatus(p)
+          (st.getModificationTime, st.getLen)
+        } catch { case _: java.io.FileNotFoundException => (-1L, -1L) }
+      Stamp(modified, length, spark.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") ||
+          k.startsWith("spark.sql.legacy.parquet.")
+      })
+    }
+  }
 
   /** Lenient event-time ingest: producers encode the `ts` column
     * differently across dataset versions — Long nanoseconds (legacy

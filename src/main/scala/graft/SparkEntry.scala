@@ -110,14 +110,14 @@ object SparkEntry {
     expr(s"unix_micros($ts) DIV 1000000")
 
   /** Micro-batch stream over events.parquet: the source needs the FILE
-    * schema (not the normalized one), then the same event-time
-    * normalization is applied post-load — it is a pure projection, so it
-    * composes with streaming frames.
+    * schema (not the normalized one; served by the session's catalog),
+    * then the same event-time normalization is applied post-load — it is
+    * a pure projection, so it composes with streaming frames.
     */
   private def eventsStream(s: SparkSession, dir: String): DataFrame =
     GraftSession.normalizeEventTime(
       graft.streaming.Streams.fileSource(s, dir,
-        GraftSession.rawTable(s, dir, "events").schema,
+        GraftSession.tableSchema(s, dir, "events"),
         globFilter = Some("events.parquet")))
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
@@ -1598,8 +1598,11 @@ object SparkEntry {
         .select(col("l_orderkey"), col("l_linenumber"),
           round(col("l_quantity")).cast("long").as("w"),
           round(col("o_totalprice") * 100).cast("long").as("total"))
+      // w closes the rank order: a (l_orderkey, l_linenumber) pair can
+      // repeat with different quantities, and rows that still tie after
+      // w are identical, so the output is a function of the input
       Allocate.largestRemainder(l, Seq("l_orderkey"), "w", "total",
-          Seq("l_linenumber"))
+          Seq("l_linenumber", "w"))
         .select(col("l_orderkey"), col("l_linenumber"),
           col("alloc").as("alloc_cents"))
         .orderBy(col("l_orderkey"), col("l_linenumber"))
@@ -4616,7 +4619,8 @@ object SparkEntry {
     "q83_stream_dedup_gate" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val index = docs.where(col("doc_id") % 10 === 0)
-      val stream = graft.streaming.Streams.fileSource(s, dir, docs.schema,
+      val stream = graft.streaming.Streams.fileSource(s, dir,
+          GraftSession.tableSchema(s, dir, "documents"),
           globFilter = Some("documents.parquet"))
         .where(col("doc_id") % 10 =!= 0)
       val novel = NearDup.simhashNoveltyGate(stream, index,
@@ -5136,9 +5140,9 @@ object SparkEntry {
     // depends on arrival order, so the deterministic surface is the set
     // of distinct fingerprints, not the survivors).
     "q56_stream_dedup" -> ((s, dir) => {
-      val batch = t(s, dir, "documents")
-      val stream = graft.streaming.Streams.fileSource(
-        s, dir, batch.schema, globFilter = Some("documents.parquet"))
+      val stream = graft.streaming.Streams.fileSource(s, dir,
+        GraftSession.tableSchema(s, dir, "documents"),
+        globFilter = Some("documents.parquet"))
       val dedup = graft.streaming.Streams.streamDedup(
         stream.select(TextAnalysis.fingerprint(col("text")).as("fp")),
         Seq("fp"))
@@ -5156,9 +5160,9 @@ object SparkEntry {
     // a class survives depends on arrival order; how many classes exist
     // per source does not).
     "q61_stream_pipeline" -> ((s, dir) => {
-      val batch = t(s, dir, "documents")
-      val stream = graft.streaming.Streams.fileSource(
-        s, dir, batch.schema, globFilter = Some("documents.parquet"))
+      val stream = graft.streaming.Streams.fileSource(s, dir,
+        GraftSession.tableSchema(s, dir, "documents"),
+        globFilter = Some("documents.parquet"))
       // tokenize ONCE into a column (the module convention — inline
       // tokens() would copy the regexp+split subtree per reference)
       val curated = stream
@@ -7998,7 +8002,7 @@ object SparkEntry {
                   total - sum(base) OVER (PARTITION BY l_orderkey)
                     AS deficit,
                   row_number() OVER (PARTITION BY l_orderkey
-                    ORDER BY rem DESC, l_linenumber) AS rnk
+                    ORDER BY rem DESC, l_linenumber, w) AS rnk
            FROM y)
          SELECT l_orderkey, l_linenumber,
                 CAST(base + CASE WHEN rnk <= deficit THEN 1 ELSE 0 END

@@ -174,7 +174,7 @@ object StageScale {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(dst).mkdirs()
     keyCols.toSeq.sortBy(_._1).foreach { case (t, keys) =>
-      val df = spark.read.parquet(s"$src/$t.parquet")
+      val df = GraftSession.rawTable(spark, src, t)
       val scaled = keys.nonEmpty && copies > 1
       val out = if (scaled) widen(df, copies, keys, t) else df
       // scaled tables: one row group per source-file-sized slice (≈ one
@@ -183,7 +183,7 @@ object StageScale {
         Some(new java.io.File(s"$src/$t.parquet").length()) else None
       writeOneFile(out, dst, t, rg)
       // staged-vs-source audit, same discipline as the streaming probe
-      val n = spark.read.parquet(s"$dst/$t.parquet").count()
+      val n = GraftSession.rawTable(spark, dst, t).count()
       val expect = df.count() * (if (scaled) copies else 1)
       require(n == expect, s"$t: staged $n rows, expected $expect")
       println(s"[stage] $t: $n rows " +
